@@ -3375,23 +3375,34 @@ def _opq_spaces(
     # is paid on first construction and recorded by the bench's
     # extra_queries_cold, the _opq_train_state discipline.
     crow = cents_plan.collect()[0]
-
-    def _cents_sql(entries) -> str:
-        return "array(" + ",".join(
-            f"named_struct('cid', {int(c['cid'])}L,"
-            f" 'cv', {_sql_larr(c['cv'])})"
-            for c in entries
-        ) + ")"
-
     cents = _local_1row_sql(
         spark,
-        f"{_cents_sql(crow['pcents'])} AS pcents,"
-        f" {_cents_sql(crow['rcents'])} AS rcents",
+        f"{_opq_cents_sql(crow['pcents'])} AS pcents,"
+        f" {_opq_cents_sql(crow['rcents'])} AS rcents",
     )
-    # The 8 per-subspace argmins are independent columns: ONE batched
-    # selectExpr instead of 8 chained withColumns (each of which
-    # re-analyzed the whole plan — r15 construction optimization; the
-    # analyzed plan is identical).
+    out = both.crossJoin(F.broadcast(cents)).selectExpr("*", *_opq_argmin_exprs())
+    _OPQ_SPACES_MEMO[memo_key] = (both, cents, out)
+    return both, cents, out
+
+
+def _opq_cents_sql(entries) -> str:
+    """A PQ codebook (sorted (cid, cv) rows) as an SQL array literal.  An
+    empty codebook (empty corpus) is a TYPED empty array: an untyped
+    ``array()`` is array<void>, and the argmins' ``c.cid`` would then
+    fail analysis."""
+    if not entries:
+        return "CAST(array() AS array<struct<cid:bigint,cv:array<bigint>>>)"
+    return "array(" + ",".join(
+        f"named_struct('cid', {int(c['cid'])}L, 'cv', {_sql_larr(c['cv'])})"
+        for c in entries
+    ) + ")"
+
+
+def _opq_argmin_exprs() -> list[str]:
+    """The 8 per-subspace argmins over ``pe``/``re`` and the ``pcents``/
+    ``rcents`` codebooks.  They are independent columns: ONE batched
+    selectExpr instead of 8 chained withColumns, each of which
+    re-analyzed the whole plan (the analyzed plan is identical)."""
     argmins = []
     for tag, vec, cc in (("p", "pe", "pcents"), ("r", "re", "rcents")):
         for m in range(_OPQ_M):
@@ -3401,9 +3412,7 @@ def _opq_spaces(
                 f"array_min(transform({cc},"
                 f" c -> named_struct('d', {dist}, 'k', c.cid))) AS {tag}b{m}"
             )
-    out = both.crossJoin(F.broadcast(cents)).selectExpr("*", *argmins)
-    _OPQ_SPACES_MEMO[memo_key] = (both, cents, out)
-    return both, cents, out
+    return argmins
 
 
 #: End-to-end IVF-OPQ-PQ search parameters: 16 IVF cells (the plain-

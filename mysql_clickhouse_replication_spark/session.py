@@ -10,6 +10,15 @@ Scale notes (100 TB design intent, tested on local[32]):
 * Session timezone pinned to UTC: fixtures carry naive timestamps and the
   DuckDB oracle is UTC-naive; any other TZ silently shifts values.
 * Arrow enabled for the (rare) pandas-UDF paths.
+* Python workers run under the engine's own daemon module
+  (``_pydaemon``).  PySpark invalidates the import caches at the start of
+  every Python task, and before CPython 3.13 that made each zipimporter
+  re-read its whole archive on the spot: ``pyspark.zip`` 13 times and the
+  spark-core jar twice, per task, paid by every micro-batch's RowBinary
+  encode and every pandas/Arrow UDF.  The daemon backports 3.13's lazy
+  invalidation; delete it (and its conf below) once the interpreter floor
+  is 3.13.  Workers find the package through ``spark.executorEnv.PYTHONPATH``
+  = the checkout root, whatever the driver's working directory.
 """
 
 from __future__ import annotations
@@ -30,6 +39,9 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+#: the checkout root: the directory that holds this package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -53,6 +65,8 @@ def get_spark(app_name: str = "mysql_clickhouse_replication_spark") -> SparkSess
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -90,8 +104,7 @@ def scratch_path(*parts: str, unique: bool = True) -> str:
     import time
     import uuid
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.join(repo, ".scratch", parts[0]) if parts else None
+    base = os.path.join(_PACKAGE_ROOT, ".scratch", parts[0]) if parts else None
     # Prune each family ONCE per process: stale siblings are >2 h old
     # by definition, so nothing new becomes prunable within one run and
     # repeating the listdir/mtime walk per key is pure per-key overhead
@@ -107,7 +120,7 @@ def scratch_path(*parts: str, unique: bool = True) -> str:
             except OSError:
                 pass
     leaf = (uuid.uuid4().hex,) if unique else ()
-    return os.path.join(repo, ".scratch", *parts, *leaf)
+    return os.path.join(_PACKAGE_ROOT, ".scratch", *parts, *leaf)
 
 
 #: (applicationId, abspath(sf_dir), table) -> lazy scan DataFrame.  A

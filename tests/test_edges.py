@@ -1597,3 +1597,41 @@ def test_session_memo_lookup_evicts_dead_sessions(spark):
     # miss on a new key still evicts nothing live and returns None
     assert session_memo_lookup(memo, (app, "/y")) is None
     assert (app, "/x") in memo
+
+
+def test_degree_bcast_memo_evicts_dead_sessions(spark, sf_dir):
+    """graph_triangle_count's broadcast guard memo reads through
+    session_memo_lookup: a lookup under the live applicationId evicts
+    the entries of a dead one instead of keeping them forever."""
+    from mysql_clickhouse_replication_spark.operators import analytics
+
+    stale = ("dead-app-123", os.path.abspath(sf_dir), "10485760")
+    analytics._DEG_BCAST_MEMO[stale] = True
+    try:
+        analytics._degree_frame_broadcastable(spark, sf_dir)
+        assert stale not in analytics._DEG_BCAST_MEMO
+        app = spark.sparkContext.applicationId
+        assert all(k[0] == app for k in analytics._DEG_BCAST_MEMO)
+    finally:
+        analytics._DEG_BCAST_MEMO.pop(stale, None)
+
+
+def test_opq_argmins_analyse_over_empty_codebooks(spark):
+    """An empty corpus gives empty PQ codebooks.  Their literal must be a
+    typed empty array: an untyped array() made the argmins' c.cid fail
+    analysis."""
+    from mysql_clickhouse_replication_spark.functions.pipeline import (
+        _local_1row_sql,
+        _opq_argmin_exprs,
+        _opq_cents_sql,
+    )
+
+    cents = _local_1row_sql(
+        spark, f"{_opq_cents_sql([])} AS pcents, {_opq_cents_sql([])} AS rcents"
+    )
+    corpus = spark.createDataFrame([], "vec_id bigint, pe array<bigint>, re array<bigint>")
+    out = corpus.crossJoin(cents).selectExpr("*", *_opq_argmin_exprs())
+    assert [f.dataType.simpleString() for f in out.schema.fields[-8:]] == [
+        "struct<d:bigint,k:bigint>"
+    ] * 8
+    assert out.collect() == []
